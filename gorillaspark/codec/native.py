@@ -351,8 +351,9 @@ def h265_search_mv_native(refY: np.ndarray, src_blk: np.ndarray,
     """C fast path for the HEVC encoder motion search — same
     (sad, (mvx, mvy)) as operators/h265._search_mv's numpy form
     (which stays as the correctness reference / fallback); None when
-    the kernel is unavailable."""
-    if NATIVE is None:
+    the kernel is unavailable or the block is wider or taller than 16,
+    the size of gs__mc_sad's fixed interpolation buffer."""
+    if NATIVE is None or w > 16 or h > 16:
         return None
     ref = np.ascontiguousarray(refY, dtype=np.int64)
     src = np.ascontiguousarray(src_blk, dtype=np.int64)

@@ -43,6 +43,10 @@ def build_session(app: str = "gorillaspark",
         # SPARK_GRAFT_SHJ_THRESHOLD overrides (bytes, 0 disables)
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "134217728"))
+        # the shuffle partition count before AQE coalescing. Encode's
+        # repartition names no count, so AQE shrinks it to the data's
+        # size and this only caps how many Python encode tasks one
+        # input can fan out to
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # Arrow is the codec UDF transport; large batches amortize the
         # per-batch kernel overhead (segmented encode is O(1) calls/batch)

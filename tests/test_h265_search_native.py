@@ -94,3 +94,18 @@ def test_native_search_tie_break_on_flat_field():
     a = _py_search_mv(ref, src, 4, 4, 8, 8, [(8, -4)], 3)
     assert (s, mv) == a
     assert s == 0
+
+
+def test_oversize_block_falls_back_to_numpy(monkeypatch):
+    # gs__mc_sad interpolates into a stack buffer sized for blocks up
+    # to 16x16; wider or taller blocks must never reach the kernel
+    rng = np.random.default_rng(3)
+    ref = rng.integers(0, 256, (48, 48)).astype(np.int64)
+    src = rng.integers(0, 256, (32, 32)).astype(np.int64)
+    args = (ref, src, 8, 8, 32, 32, [(5, -6)], 2)
+    assert h265_search_mv_native(*args) is None
+    assert h265_search_mv_native(ref, src[:16], 8, 8, 32, 16,
+                                 [], 1) is None
+    got = h5._search_mv(*args)
+    monkeypatch.setattr(h5, "h265_search_mv_native", lambda *a: None)
+    assert got == h5._search_mv(*args) == _py_search_mv(*args)

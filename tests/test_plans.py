@@ -68,6 +68,11 @@ def test_encode_points_shuffles_once(spark):
     # a second one would mean the sort or the UDF re-shuffled
     n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchange == 1, f"{n_exchange} exchanges:\n{plan}"
+    # the repartition names no partition count, so AQE may coalesce
+    # it to the data's size; a pinned count (REPARTITION_BY_NUM) fans
+    # a small input out to one Python task per shuffle partition
+    assert "REPARTITION_BY_COL" in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
 
 
 def test_rollup_whole_stage_codegen(spark):

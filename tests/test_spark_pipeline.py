@@ -321,20 +321,58 @@ def test_compact_blocks_bit_identical(spark):
         assert np.array_equal(np.asarray(a), np.asarray(b))
 
 
-def test_hashed_shuffle_encode_bit_identical(spark):
-    """encode_points(hashed_shuffle=True) routes integer key hashes
-    through the shuffle/Arrow layers and re-attaches strings per
-    block — the block set must be bit-identical to the default path."""
-    from gorillaspark.operators.encode import encode_points
+def test_encode_blocks_straddling_arrow_batches(spark):
+    """A coalesced encode task carries many series, so blocks routinely
+    straddle Arrow batches and _encode_partition's carry-over is the
+    main path. With 5-row batches every block here straddles at least
+    one boundary, and one hot series-day spans 100 batches; the words
+    must equal the scalar reference encoder run per (series, day) block
+    and the default-batch output."""
+    from gorillaspark.codec.scalar import GorillaEncoder
 
     day = 86_400_000
-    rows = [(f"conv_{i % 7}", day * (1 + i % 3) + i * 977, float(i) / 3)
-            for i in range(2000)]
+    base = 19_676 * day
+    rng = np.random.default_rng(5)
+    rows = []
+    for s in range(24):
+        for d in range(4):
+            n = int(rng.integers(6, 40))
+            offs = np.sort(rng.choice(day, n, replace=False))
+            rows += [(f"s{s:02d}", base + d * day + int(o),
+                      round(float(rng.normal(50, 10)), 2)) for o in offs]
+    hot = np.sort(rng.choice(day, 500, replace=False))
+    rows += [("hot", base + 2 * day + int(o), float(i % 13) / 4)
+             for i, o in enumerate(hot)]
     pts = spark.createDataFrame(
         rows, "series_key string, ts_ms long, value double")
-    a = sorted((r.series_key, r.block_ts, tuple(r.words))
-               for r in encode_points(pts, "double").collect())
-    b = sorted((r.series_key, r.block_ts, tuple(r.words))
-               for r in encode_points(pts, "double",
-                                      hashed_shuffle=True).collect())
-    assert a == b and len(a) == 21  # 7 series x 3 days
+
+    expect = {}
+    for k, t, v in sorted(rows):
+        bts = t - t % day
+        if (k, bts) not in expect:
+            expect[k, bts] = GorillaEncoder(bts)
+        expect[k, bts].add(t, int(np.float64(v).view(np.uint64)))
+    expect = {kb: np.array(e.close(), dtype=np.uint64)
+              for kb, e in expect.items()}
+
+    def blocks():
+        got = encode_points(pts, "double").collect()
+        out = {(r.series_key, r.block_ts):
+               np.array(r.words, dtype=np.int64).view(np.uint64)
+               for r in got}
+        assert len(out) == len(got)     # no block split in two
+        return out
+
+    default = blocks()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "5")
+    try:
+        tiny = blocks()
+    finally:
+        spark.conf.set(conf, prev)
+    assert len(expect) == 24 * 4 + 1
+    for got in (tiny, default):
+        assert got.keys() == expect.keys()
+        for kb, w in expect.items():
+            assert np.array_equal(got[kb], w), kb
